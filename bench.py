@@ -913,6 +913,23 @@ def main() -> None:
     spark.stop()
 
 
+def env_pair(name: str, default: str) -> tuple[int, int]:
+    """The "lo,hi" pair in env var ``name`` (``default`` when unset):
+    exactly two positive ints with lo < hi. Parsed before any fixture or
+    spark-submit run starts, so a bad value fails at once with its name
+    instead of as an unpack error after the first measurement."""
+    raw = os.environ.get(name, default)
+    try:
+        lo, hi = (int(x) for x in raw.split(","))
+    except ValueError:
+        lo = hi = 0
+    if not 0 < lo < hi:
+        raise ValueError(
+            f"{name}={raw!r}: want two positive integers lo,hi with lo < hi"
+        )
+    return lo, hi
+
+
 def run_scaling() -> None:
     """KG job at N vs 4N cores in fresh JVMs; efficiency to BENCH/BASELINE.md.
 
@@ -948,9 +965,7 @@ def run_scaling() -> None:
     # 'scale' input ~0.78-contended for exactly that reason — don't
     # default to them.
     size = os.environ.get("SPARK_GRAFT_SCALE_SIZE", "scale3")
-    pair = tuple(
-        int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_PAIR", "2,8").split(",")
-    )
+    pair = env_pair("SPARK_GRAFT_SCALE_PAIR", "2,8")
     repeat = int(os.environ.get("SPARK_GRAFT_SCALE_REPEAT", "2"))
     ensure_fixture_dir(size)
     results = {}
@@ -1080,10 +1095,7 @@ def run_scaling_cluster() -> None:
     from ner_spark.deploy import build_pyfiles_zip
 
     size = os.environ.get("SPARK_GRAFT_SCALE_SIZE", "scale3")
-    pair = tuple(
-        int(x)
-        for x in os.environ.get("SPARK_GRAFT_CLUSTER_PAIR", "2,8").split(",")
-    )
+    pair = env_pair("SPARK_GRAFT_CLUSTER_PAIR", "2,8")
     cores = int(os.environ.get("SPARK_GRAFT_CLUSTER_CORES", "2"))
     mem_mb = int(os.environ.get("SPARK_GRAFT_CLUSTER_MEM_MB", "7168"))
     repeat = int(os.environ.get("SPARK_GRAFT_SCALE_REPEAT", "2"))

@@ -23,6 +23,15 @@ import pandas as pd
 
 from ner_spark import spec
 
+# fixtures live in the data/ directory of the checkout this module is in,
+# so a copy of the repo reads and writes its own. A driver that imports
+# this module from a --py-files zip has no checkout around it and uses the
+# data/ of its working directory (jobs are submitted from the repo root).
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DATA_ROOT = os.path.join(
+    _CHECKOUT if os.path.isdir(_CHECKOUT) else os.getcwd(), "data"
+)
+
 # ---------------------------------------------------------------------------
 # Vocabularies (synthetic; unicode on purpose)
 # ---------------------------------------------------------------------------
@@ -347,7 +356,7 @@ def materialize(out_dir: str, size: str = "small", seed: int = 42) -> dict[str, 
     return paths
 
 
-def ensure_stream_dir(size: str, root: str = "/root/repo/data", n_files: int = 4) -> str:
+def ensure_stream_dir(size: str, root: str = DATA_ROOT, n_files: int = 4) -> str:
     """Transcripts-only directory split into n_files parquet parts — the
     file-stream source needs a directory, and several files exercise
     multi-micro-batch processing (maxFilesPerTrigger)."""
@@ -361,7 +370,7 @@ def ensure_stream_dir(size: str, root: str = "/root/repo/data", n_files: int = 4
     return sd
 
 
-def ensure_fixture_dir(size: str, root: str = "/root/repo/data") -> str:
+def ensure_fixture_dir(size: str, root: str = DATA_ROOT) -> str:
     """Idempotent materialize-on-demand; returns the directory."""
     d = os.path.join(root, size)
     if not all(
@@ -379,5 +388,5 @@ if __name__ == "__main__":
     ap.add_argument("--size", default="small", choices=sorted(SIZES))
     ap.add_argument("--out", default=None)
     a = ap.parse_args()
-    out = a.out or f"/root/repo/data/{a.size}"
+    out = a.out or os.path.join(DATA_ROOT, a.size)
     print(materialize(out, a.size))

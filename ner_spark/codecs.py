@@ -534,7 +534,8 @@ def decode_jpeg_gray(data: bytes) -> np.ndarray:
     COM segments are skipped, quant/huffman tables are read from the
     stream). SOF2/arithmetic/hierarchical markers, restart intervals,
     16-bit quant tables, subsampling and multi-component scans raise
-    NotImplementedError — the documented libjpeg boundary."""
+    NotImplementedError — the documented libjpeg boundary. A stream that
+    ends inside a marker raises ValueError("truncated marker segment")."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -547,12 +548,16 @@ def decode_jpeg_gray(data: bytes) -> np.ndarray:
             raise ValueError(f"expected marker at byte {pos}")
         while pos + 1 < len(data) and data[pos + 1] == 0xFF:
             pos += 1  # optional fill bytes before any marker (B.1.1.2)
+        if pos + 1 >= len(data):
+            raise ValueError("truncated marker segment")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
             break
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:
             continue  # standalone TEM/RSTn
+        if pos + 2 > len(data):
+            raise ValueError("truncated marker segment")
         (ln,) = struct.unpack(">H", data[pos:pos + 2])
         body = data[pos + 2:pos + ln]
         pos += ln
@@ -1129,7 +1134,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     Progressive/arithmetic/hierarchical coding, 16-bit quant tables and
     sampling factors > 2 raise NotImplementedError — the documented
     libjpeg boundary (``decode_jpeg_gray`` remains the strict
-    single-component parser)."""
+    single-component parser). A stream that ends inside a marker raises
+    ValueError("truncated marker segment")."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -1145,12 +1151,16 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             raise ValueError(f"expected marker at byte {pos}")
         while pos + 1 < len(data) and data[pos + 1] == 0xFF:
             pos += 1  # optional fill bytes before any marker (B.1.1.2)
+        if pos + 1 >= len(data):
+            raise ValueError("truncated marker segment")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI
             break
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:
             continue  # standalone TEM/RSTn
+        if pos + 2 > len(data):
+            raise ValueError("truncated marker segment")
         (ln,) = struct.unpack(">H", data[pos:pos + 2])
         body = data[pos + 2:pos + ln]
         pos += ln

@@ -1,13 +1,26 @@
-"""Co-reference edges + iterative-join connected components
-(SURVEY.md §2.4 B3, §2.6 B10/B11).
+"""Co-reference edges, entity canonicalization and iterative-join connected
+components (SURVEY.md §2.4 B3, §2.6 B10/B11).
 
-GraphFrames is unavailable in this sandbox (SURVEY.md §0 [V]), so CC is the
-alternating large-star / small-star algorithm of Kiveris et al.,
-"Connected Components in MapReduce and Beyond" (SOCC'13), expressed as
-DataFrame joins: O(log n) rounds, each round = two groupBy/join stages,
-``localCheckpoint`` per round to truncate lineage, convergence = emitted
-edge set stable. Node ids are strings; min is string order (matches the
-oracle's union-find canonical = min entity_id).
+Two connected-component operators, split by how large the graph can get:
+
+- ``canonical_map`` canonicalizes linked entities. Its graph has gazetteer
+  entities as nodes, and an edge only joins two entities that share a
+  ``norm_surface`` in the gazetteer, so its size is bounded by the
+  gazetteer, not the corpus. It collects the edges and runs one
+  path-compressing union-find on the driver.
+- ``connected_components`` serves graphs that grow with the corpus (the
+  near-duplicate document clusters of ``plans/curation.py`` and
+  ``queries_text.py``). GraphFrames is unavailable in this sandbox
+  (SURVEY.md §0 [V]), so it is the alternating large-star / small-star
+  algorithm of Kiveris et al., "Connected Components in MapReduce and
+  Beyond" (SOCC'13), expressed as DataFrame joins: O(log n) rounds, each
+  round = two groupBy/join stages, ``localCheckpoint`` per round to
+  truncate lineage, convergence = emitted edge set stable.
+
+Node ids are strings and both operators label a component with its min id
+in string order (matches the oracle's union-find canonical = min
+entity_id). Python compares ``str`` by code point and Spark compares
+strings by UTF-8 bytes; the two orders agree.
 """
 
 from __future__ import annotations
@@ -77,6 +90,9 @@ def _small_star(e: DataFrame) -> DataFrame:
 def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
     """edges(src_entity, dst_entity) → (entity_id, canonical_id).
 
+    For graphs that grow with the corpus (document clusters); the entity
+    graph, bounded by the gazetteer, goes through ``canonical_map``.
+
     Alternating large-star/small-star until the edge set is stable; the
     final edge set is a union of stars (node → component min). Nodes only
     ever appearing as a component min map to themselves via the union at
@@ -110,11 +126,43 @@ def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
 
 
 def canonical_map(links: DataFrame, edges: DataFrame) -> DataFrame:
-    """(entity_id, canonical_id) covering every linked entity (singletons → self)."""
-    cc = connected_components(edges)
+    """(entity_id, canonical_id) covering every linked entity (singletons →
+    self); canonical_id is the min entity_id of the entity's component.
+
+    ``edges`` is the ``coref_edges`` output. Both ends of an edge were
+    linked from one ``norm_surface``, and linking only joins a mention to
+    the gazetteer entities listed under its ``norm_surface``. So the edge
+    set is at most Σ_s C(k_s, 2), where k_s is the number of gazetteer
+    entities under surface s, whatever the corpus size. That bound is what
+    makes it safe to collect the edges and run a union-find on the driver:
+    one small job instead of the O(log n) rounds of Spark jobs that
+    ``connected_components`` spends. Do not reuse this collect on a graph
+    without such a bound; ``connected_components`` is for those.
+
+    The union-find roots each component at its smaller id (the rule of
+    ``oracle.ref_pipeline.UnionFind``). Its (entity_id, canonical_id) rows
+    become a local frame, broadcast into a left join from the distinct
+    linked entities.
+    """
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for src, dst in edges.select("src_entity", "dst_entity").collect():
+        a, b = find(src), find(dst)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    cc = links.sparkSession.createDataFrame(
+        [(e, find(e)) for e in parent], "entity_id string, canonical_id string"
+    )
     all_nodes = links.select("entity_id").distinct()
     return (
-        all_nodes.join(cc, "entity_id", "left")
+        all_nodes.join(F.broadcast(cc), "entity_id", "left")
         .withColumn("canonical_id", F.coalesce("canonical_id", "entity_id"))
         .select("entity_id", "canonical_id")
     )

@@ -5,7 +5,7 @@ materialization, per-partition lineage + metrics, and idempotent resume
 Stage graph:
   transcripts → [repartition by conv_id] → fused NLP mapInPandas → mentions
   → B1 broadcast gazetteer join → B2 link-score join (AQE skew) → B13 top-1
-  → links → B3/B11 coref edges → B10 iterative CC → canonical map
+  → links → B3/B11 coref edges → union-find canonical map
   → B5 triples (REL/COOC pairs + TOOL as-of) → canonicalized triples
   → B8 entity aggregation.
 

@@ -74,7 +74,9 @@ def ensure_conll_fixture(size: str = "tiny") -> str:
     """Idempotent materialize-on-demand of the CoNLL eval corpus; the
     single owner of its on-disk location (shared by conll_ingest,
     nlp_train_eval, tests, and the golden generator)."""
-    path = f"/root/repo/data/{size}/conll/eval.conll"
+    from fixtures.gen import DATA_ROOT
+
+    path = os.path.join(DATA_ROOT, size, "conll", "eval.conll")
     if not os.path.exists(path):
         write_conll_fixture(path, size)
     return path

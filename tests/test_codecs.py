@@ -759,3 +759,19 @@ def test_jpeg_fill_bytes_before_markers():
     prog = encode_jpeg_progressive(img)
     pfill = prog[:2] + b"\xff\xff\xff" + prog[2:]
     assert np.array_equal(decode_jpeg(pfill), decode_jpeg(prog))
+
+
+@pytest.mark.parametrize(
+    "tail",
+    [b"\xff\xff", b"\xff", b"\xff\xdb", b"\xff\xdb\x00"],
+    ids=["fill-fill", "lone-ff", "no-length", "half-length"],
+)
+@pytest.mark.parametrize("decoder", ["decode_jpeg_gray", "decode_jpeg"])
+def test_jpeg_truncated_marker_raises_value_error(decoder, tail):
+    """A stream cut inside a marker (after fill bytes, or before its
+    length field) is malformed input: ValueError, not IndexError or
+    struct.error."""
+    import ner_spark.codecs as C
+
+    with pytest.raises(ValueError, match="truncated marker segment"):
+        getattr(C, decoder)(b"\xff\xd8" + tail)
