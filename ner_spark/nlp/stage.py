@@ -55,6 +55,35 @@ def _broadcasts(
     return bc_model, bc_gaz
 
 
+def mention_frame(pdf: pd.DataFrame, model: dict, gaz: V.GazMatcher) -> pd.DataFrame:
+    """One batch of turns (conv_id, turn_idx, text) → its MENTIONS_SCHEMA
+    frame. The one mention-frame build: batch, streaming and stateful
+    paths all call it, so their rows agree by construction."""
+    texts = pdf["text"].to_numpy(dtype=object)
+    men, _ = V.nlp_batch(texts, gaz, model["WT"], model["T"], model["start"])
+    rows = men["row"]
+    return pd.DataFrame(
+        {
+            "conv_id": pdf["conv_id"].to_numpy()[rows],
+            "turn_idx": pdf["turn_idx"].to_numpy()[rows].astype(np.int32),
+            "sent_idx": men["sent_in_turn"].astype(np.int32),
+            "start": men["start"].astype(np.int32),
+            "end": men["end"].astype(np.int32),
+            "surface": men["surface"],
+            "norm_surface": [spec.norm_surface(s) for s in men["surface"]],
+            "ner_type": _TYPES[men["type_code"]] if len(rows) else [],
+            "score": men["score"],
+            # packed little-endian float64 bytes: one memcpy per row
+            # beats Arrow list<double> conversion at 10^6 mentions;
+            # dtype=object also keeps the all-empty batch Arrow-safe
+            "ctx_emb": pd.Series(
+                [r.tobytes() for r in np.ascontiguousarray(men["ctx"], dtype="<f8")],
+                dtype=object,
+            ),
+        }
+    )
+
+
 def detect_mentions(
     transcripts: DataFrame,
     gazetteer_pdf: pd.DataFrame,
@@ -73,104 +102,11 @@ def detect_mentions(
     bc_model, bc_gaz = _broadcasts(spark, gazetteer_pdf, model)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = bc_model.value
-        gaz = bc_gaz.value
+        m, gaz = bc_model.value, bc_gaz.value
         for pdf in batches:
-            texts = pdf["text"].to_numpy(dtype=object)
-            men, _ = V.nlp_batch(texts, gaz, m["WT"], m["T"], m["start"])
-            rows = men["row"]
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy()[rows],
-                    "turn_idx": pdf["turn_idx"].to_numpy()[rows].astype(np.int32),
-                    "sent_idx": men["sent_in_turn"].astype(np.int32),
-                    "start": men["start"].astype(np.int32),
-                    "end": men["end"].astype(np.int32),
-                    "surface": men["surface"],
-                    "norm_surface": [spec.norm_surface(s) for s in men["surface"]],
-                    "ner_type": _TYPES[men["type_code"]] if len(rows) else [],
-                    "score": men["score"],
-                    # packed little-endian float64 bytes: one memcpy per row
-                    # beats Arrow list<double> conversion at 10^6 mentions;
-                    # dtype=object also keeps the all-empty batch Arrow-safe
-                    "ctx_emb": pd.Series(
-                        [r.tobytes() for r in np.ascontiguousarray(
-                            men["ctx"], dtype="<f8")],
-                        dtype=object,
-                    ),
-                }
-            )
+            yield mention_frame(pdf, m, gaz)
 
     return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        fn, MENTIONS_SCHEMA
-    )
-
-
-def detect_mentions_arrow(
-    transcripts: DataFrame, gazetteer_pdf: pd.DataFrame, spark: SparkSession
-) -> DataFrame:
-    """detect_mentions over ``mapInArrow`` (round-4: VERDICT r03 item 4
-    A/B): same fused numpy kernel, but the Arrow record batches are
-    consumed and produced directly — no pandas DataFrame wrapper on
-    either side of the boundary. The measured differences vs the
-    mapInPandas path (same batch sizes, same kernel):
-
-    - input: ``conv_id``/``turn_idx`` stay Arrow arrays and the
-      per-mention row gather is ``Array.take`` (C++), not a numpy object
-      round-trip;
-    - output: ``ctx_emb`` is built as ONE zero-copy FixedSizeBinary
-      array over the contiguous (n, EMB_DIM) float64 block, then cast to
-      binary — the pandas path materializes a python ``bytes`` object
-      per mention (~10^6 allocations at bench scale);
-    - no pandas→Arrow inference pass on the 10-column output.
-
-    Byte-identity gates (tests/test_contract.py parity test) pin both
-    paths to identical output."""
-    import pyarrow as pa
-
-    bc_model, bc_gaz = _broadcasts(spark, gazetteer_pdf)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        m = bc_model.value
-        gaz = bc_gaz.value
-        for rb in batches:
-            cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
-            texts = cols["text"].to_numpy(zero_copy_only=False)
-            men, _ = V.nlp_batch(texts, gaz, m["WT"], m["T"], m["start"])
-            rows = pa.array(men["row"], type=pa.int64())
-            n = len(men["row"])
-            ctx = np.ascontiguousarray(men["ctx"], dtype="<f8")
-            width = ctx.shape[1] * 8
-            ctx_fixed = pa.FixedSizeBinaryArray.from_buffers(
-                pa.binary(width), n, [None, pa.py_buffer(ctx.data)]
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    cols["conv_id"].take(rows),
-                    cols["turn_idx"].take(rows).cast(pa.int32()),
-                    pa.array(men["sent_in_turn"], type=pa.int32()),
-                    pa.array(men["start"], type=pa.int32()),
-                    pa.array(men["end"], type=pa.int32()),
-                    pa.array(men["surface"], type=pa.string()),
-                    pa.array(
-                        [spec.norm_surface(s) for s in men["surface"]],
-                        type=pa.string(),
-                    ),
-                    pa.array(
-                        _TYPES[men["type_code"]] if n else [],
-                        type=pa.string(),
-                    ),
-                    pa.array(men["score"], type=pa.float64()),
-                    ctx_fixed.cast(pa.binary()),
-                ],
-                names=[
-                    "conv_id", "turn_idx", "sent_idx", "start", "end",
-                    "surface", "norm_surface", "ner_type", "score",
-                    "ctx_emb",
-                ],
-            )
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInArrow(
         fn, MENTIONS_SCHEMA
     )
 

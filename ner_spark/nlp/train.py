@@ -144,17 +144,6 @@ def train_perceptron(
     - ``"batch"`` — decode the WHOLE corpus against fixed weights, apply
       the summed integer update once per pass. Bit-deterministic for ANY
       partitioning (exact integer sums; the invariance test's scope).
-    - ``"averaged"`` — batch passes, but the returned weights are the
-      tail (suffix) average of the per-pass iterates: the mean of the
-      LAST HALF of the trajectory. Same updates and mistake curve as
-      batch, same partitioning-determinism; only the returned matrix
-      differs — averaging damps the last passes' oscillation around the
-      margin. Tail rather than full-trajectory Collins averaging
-      because a from-zero batch run CONVERGES monotonically for most of
-      a short budget: measured on the tiny corpus (BENCH/BASELINE.md
-      A/B), averaging ALL 12 iterates is dominated by under-trained
-      early weights (held-out F1 0.37 vs batch 0.98), while the
-      half-tail mean keeps the stabilization without the regression.
     - ``"ipm"`` — iterative parameter mixing: each partition runs a
       LOCAL perceptron for the pass (decode a ``mix_chunk``-sentence
       chunk with its CURRENT local weights, apply the update locally,
@@ -167,7 +156,7 @@ def train_perceptron(
       mistake-sparse like batch; the mixing divide makes the weight
       lattice finer (lr/S steps), not denser.
     """
-    if mode not in ("batch", "averaged", "ipm"):
+    if mode not in ("batch", "ipm"):
         raise ValueError(f"unknown training mode {mode!r}")
     sc = spark.sparkContext
     T, start = structural_transitions()
@@ -177,9 +166,6 @@ def train_perceptron(
     # parse, groupBy, array_sort) without it
     data = sents.select("tokens", "golds").persist()
     history: list[dict] = []
-    # tail averaging: keep the per-pass iterates (references — the loop
-    # already copies WT each pass) and average the last half at the end
-    iterates: list[np.ndarray] | None = [] if mode == "averaged" else None
     try:
         for _ in range(iters):
             bc_w = sc.broadcast(WT)
@@ -208,7 +194,7 @@ def train_perceptron(
                 elif r["d"]:
                     pend.append(r)
             WT = WT.copy()
-            # batch/averaged apply the summed update at lr; ipm applies
+            # batch applies the summed update at lr; ipm applies
             # the UNIFORM MIX of the per-shard local deltas — each shard
             # emitted its integer update counts, so the mixed delta is
             # lr * sum / n_shards
@@ -216,19 +202,12 @@ def train_perceptron(
             for r in pend:
                 WT[r["i"], r["j"]] += scale * r["d"]
                 stats["nnz_update"] += 1
-            if iterates is not None:
-                iterates.append(WT)
             history.append(stats)
             if stats["n_mis"] == 0:
                 break
     finally:
         bc_gaz.destroy()
         data.unpersist()
-    if iterates:
-        tail = iterates[len(iterates) // 2:]
-        WT = (
-            np.sum(tail, axis=0, dtype=np.float64) / len(tail)
-        ).astype(np.float32)
     return WT, history
 
 

@@ -166,3 +166,17 @@ def canonical_map(links: DataFrame, edges: DataFrame) -> DataFrame:
         .withColumn("canonical_id", F.coalesce("canonical_id", "entity_id"))
         .select("entity_id", "canonical_id")
     )
+
+
+def entity_rollup(links: DataFrame, canon: DataFrame) -> DataFrame:
+    """links + canonical map → one row per canonical entity: sorted
+    distinct aliases, mention count and most frequent ner_type (B8)."""
+    return (
+        links.join(F.broadcast(canon), "entity_id")
+        .groupBy(F.col("canonical_id").alias("entity_id"))
+        .agg(
+            F.array_sort(F.collect_set("norm_surface")).alias("aliases"),
+            F.count(F.lit(1)).alias("n_mentions"),
+            F.mode("ner_type").alias("ner_type"),
+        )
+    )

@@ -55,57 +55,70 @@ _SCORED_SCHEMA = (
 )
 
 
-# a type instance, not a DDL string (that would need an active session at
-# import time)
-@pandas_udf(BinaryType())
-def _pack64(emb: pd.Series) -> pd.Series:
-    """array<float> → packed little-endian float64 bytes (entity side;
-    runs once over the small embedding table, distributed-safe)."""
+def pack64(emb: pd.Series) -> pd.Series:
+    """array<float> → packed little-endian float64 bytes; None stays None.
+    The entity-side packing of both the batch join and the streaming
+    candidate frame."""
     return pd.Series(
         [None if v is None else np.asarray(v, "<f8").tobytes() for v in emb],
+        index=emb.index,
         dtype=object,
     )
 
 
+# a type instance, not a DDL string (that would need an active session at
+# import time); runs once over the small embedding table, distributed-safe
+_pack64 = pandas_udf(pack64, BinaryType())
+
+
+def score_candidates(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Candidate rows carrying packed ``ctx_emb`` and ``emb_bin`` →
+    _LINK_COLS + entity_id + link_score, on the same index. The one link
+    scorer of the batch and streaming paths.
+
+    A null ``emb_bin`` — an Arrow null from the batch left join or a
+    float NaN from a pandas left merge — scores cos = 0.0."""
+    n = len(pdf)
+    A = np.frombuffer(b"".join(pdf["ctx_emb"].to_numpy()), "<f8").reshape(
+        n, spec.EMB_DIM
+    )
+    null = pdf["emb_bin"].isna().to_numpy()
+    bv = pdf["emb_bin"].to_numpy(copy=True)
+    bv[null] = b"\x00" * _EMB_BYTES
+    B = np.frombuffer(b"".join(bv), "<f8").reshape(n, spec.EMB_DIM)
+    cos = spec.cosine64_batch(A, B)
+    cos[null] = 0.0
+    out = pdf[_LINK_COLS + ["entity_id"]].copy()
+    # vectorized correctly-rounded half-even — elementwise equal to
+    # python round (the binding semantics), 60x the per-row listcomp
+    out["link_score"] = pd.Series(
+        spec.round_half_even_batch(
+            spec.LINK_W_GAZ * spec.GAZ_SCORE_EXACT + spec.LINK_W_EMB * cos,
+            spec.SCORE_NDIGITS,
+        ),
+        index=pdf.index,
+        dtype="float64",
+    )
+    return out
+
+
 def _score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Vectorized candidate scoring over packed-binary embeddings."""
-    base = spec.LINK_W_GAZ * spec.GAZ_SCORE_EXACT
-    w = spec.LINK_W_EMB
-    zero = b"\x00" * _EMB_BYTES
     for pdf in batches:
-        n = len(pdf)
-        if not n:
-            continue
-        A = np.frombuffer(b"".join(pdf["ctx_emb"].to_numpy()), "<f8").reshape(
-            n, spec.EMB_DIM
-        )
-        bv = pdf["emb_bin"].to_numpy()
-        null = np.fromiter((v is None for v in bv), bool, n)
-        if null.any():
-            bv = np.array(
-                [zero if m else v for v, m in zip(bv, null)], dtype=object
-            )
-        B = np.frombuffer(b"".join(bv), "<f8").reshape(n, spec.EMB_DIM)
-        cos = spec.cosine64_batch(A, B)
-        cos[null] = 0.0
-        out = pdf[_LINK_COLS + ["entity_id"]].copy()
-        # vectorized correctly-rounded half-even — elementwise equal to
-        # python round (the binding semantics), 60x the per-row listcomp
-        out["link_score"] = pd.Series(
-            spec.round_half_even_batch(base + w * cos, spec.SCORE_NDIGITS),
-            index=pdf.index,
-            dtype="float64",
-        )
-        yield out
+        if len(pdf):
+            yield score_candidates(pdf)
 
 
-def gazetteer_norm(spark: SparkSession, gazetteer_pdf: pd.DataFrame) -> DataFrame:
+def gazetteer_norm_pdf(gazetteer_pdf: pd.DataFrame) -> pd.DataFrame:
     """Gazetteer with python-casefold norm_surface, distinct candidate rows."""
     g = gazetteer_pdf.copy()
     g["norm_surface"] = [spec.norm_surface(s) for s in g["surface_form"]]
-    return spark.createDataFrame(
-        g[["norm_surface", "entity_id", "ner_type"]].drop_duplicates()
-    )
+    return g[["norm_surface", "entity_id", "ner_type"]].drop_duplicates()
+
+
+def gazetteer_norm(spark: SparkSession, gazetteer_pdf: pd.DataFrame) -> DataFrame:
+    """``gazetteer_norm_pdf`` as a Spark DataFrame (the broadcast side of
+    the candidate join)."""
+    return spark.createDataFrame(gazetteer_norm_pdf(gazetteer_pdf))
 
 
 def link_mentions(

@@ -52,7 +52,7 @@ from ner_spark.iceberg.spark_io import (
 )
 from ner_spark.iceberg.table import IcebergLocalTable
 from ner_spark.nlp.stage import detect_mentions
-from ner_spark.operators.coref import canonical_map, coref_edges
+from ner_spark.operators.coref import canonical_map, coref_edges, entity_rollup
 from ner_spark.operators.linking import gazetteer_norm, link_mentions
 
 
@@ -163,17 +163,7 @@ def incremental_kg_update(
 
     # global refresh from accumulated links (cheap tail)
     links = read_iceberg(spark, links_loc)
-    edges = coref_edges(links)
-    canon = canonical_map(links, edges)
-    entities = (
-        links.join(F.broadcast(canon), "entity_id")
-        .groupBy(F.col("canonical_id").alias("entity_id"))
-        .agg(
-            F.array_sort(F.collect_set("norm_surface")).alias("aliases"),
-            F.count(F.lit(1)).alias("n_mentions"),
-            F.mode("ner_type").alias("ner_type"),
-        )
-    )
+    entities = entity_rollup(links, canonical_map(links, coref_edges(links)))
     return {
         "processed_rows": processed,
         "from_snapshot": from_id,

@@ -19,15 +19,10 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ner_spark.nlp.stage import detect_mentions
-from ner_spark.plans.base import (  # noqa: F401 — re-exported for callers
-    LINEAGE_COLS,
-    StagedPipeline,
-    lineage_rows,
-)
-from ner_spark.operators.coref import canonical_map, coref_edges
+from ner_spark.plans.base import StagedPipeline
+from ner_spark.operators.coref import canonical_map, coref_edges, entity_rollup
 from ner_spark.operators.linking import gazetteer_norm, link_mentions
 from ner_spark.operators.triples import (
     canonicalize_triples,
@@ -107,16 +102,7 @@ class KGPipeline(StagedPipeline):
                 canon,
             ),
         )
-        entities = self._stage(
-            "entities",
-            lambda: links.join(F.broadcast(canon), "entity_id")
-            .groupBy(F.col("canonical_id").alias("entity_id"))
-            .agg(
-                F.array_sort(F.collect_set("norm_surface")).alias("aliases"),
-                F.count(F.lit(1)).alias("n_mentions"),
-                F.mode("ner_type").alias("ner_type"),
-            ),
-        )
+        entities = self._stage("entities", lambda: entity_rollup(links, canon))
         self._join_lineage()
         return {
             "mentions": mentions,

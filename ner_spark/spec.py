@@ -179,10 +179,12 @@ def round_half_even_batch(x, nd: int):
 
     x = np.asarray(x, np.float64)
     scale = 10.0**nd
-    s = x * scale
-    y = np.rint(s) / scale
-    dist = np.abs(s - np.floor(s) - 0.5)
-    risky = dist <= 4.0 * np.abs(s) * 2.220446049250313e-16  # 2**-52
+    with np.errstate(over="ignore", invalid="ignore"):
+        s = x * scale
+        y = np.rint(s) / scale
+        dist = np.abs(s - np.floor(s) - 0.5)
+        # negated compare: a scaling overflow (s = inf, dist = nan) is risky too
+        risky = ~(dist > 4.0 * np.abs(s) * 2.220446049250313e-16)  # 2**-52
     if risky.any():
         idx = np.nonzero(risky)[0]
         y[idx] = [round(float(x[i]), nd) for i in idx]

@@ -11,15 +11,17 @@ S4     stateful per-conversation processing via applyInPandasWithState —
        replayed (state = per-conv set of processed turn_idx)
 S6     availableNow sinks; the streaming checkpoint gives idempotent resume
 
-Design note (streaming_links): the batch path's top-1-per-mention is a
-window function (operators/linking.py B13), which Structured Streaming does
-not support, and an append-mode aggregation would withhold unfinalized
-windows — breaking batch/stream parity on bounded input. The streaming path
-therefore fuses candidate lookup + cosine scoring + deterministic argmax
-into the same mapInPandas stage, against *broadcast* gazetteer + entity
-embeddings (the north rule mandates broadcasting those anyway —
-BASELINE.json:14). Scores reuse spec.cosine64 / spec round semantics, so
-stream output == batch output row-for-row (tests/test_streaming.py).
+Design note (streaming_links): the stream shares the batch code for both
+halves of linking — ``nlp.stage.mention_frame`` builds the mentions and
+``operators.linking.score_candidates`` scores them against the same
+gazetteer candidates (``gazetteer_norm_pdf``) and ``pack64``-packed
+entity embeddings, both broadcast (BASELINE.json:14). Only the top-1 per
+mention runs pandas-side: the batch path's top-1 is a Spark aggregate
+(operators/linking.py B13) that Structured Streaming cannot run without
+withholding unfinalized groups in append mode, which would break
+batch/stream parity on bounded input. The pandas sort keeps the same
+order — max link_score, ties to min entity_id — so stream output ==
+batch output row-for-row (tests/test_streaming.py).
 """
 
 from __future__ import annotations
@@ -32,10 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ner_spark import spec
-from ner_spark.nlp import vectorized as V
-from ner_spark.nlp.model import build_model
-from ner_spark.nlp.stage import MENTIONS_SCHEMA
+from ner_spark.nlp.stage import MENTIONS_SCHEMA, _broadcasts, mention_frame
+from ner_spark.operators.linking import (
+    gazetteer_norm_pdf,
+    pack64,
+    score_candidates,
+)
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -71,49 +75,6 @@ def deduped(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
 # ---------------------------------------------------------------------------
 # fused NLP + linking stage (stream-safe, batch-parity)
 # ---------------------------------------------------------------------------
-def _candidate_pdf(gazetteer_pdf: pd.DataFrame, emb_pdf: pd.DataFrame) -> pd.DataFrame:
-    """(norm_surface, ner_type, entity_id, embedding) candidate side."""
-    g = gazetteer_pdf.copy()
-    g["norm_surface"] = [spec.norm_surface(s) for s in g["surface_form"]]
-    g = g[["norm_surface", "ner_type", "entity_id"]].drop_duplicates()
-    return g.merge(emb_pdf, on="entity_id", how="left")
-
-
-def _link_pandas(mentions: pd.DataFrame, cand: pd.DataFrame) -> pd.DataFrame:
-    """Candidate merge + cosine64 score + deterministic argmax (B1/B2/B13
-    semantics, python-side). `mentions` carries a ctx_emb column."""
-    m = mentions.reset_index(drop=True).reset_index(names="mid")
-    c = m.merge(cand, on=["norm_surface", "ner_type"], how="inner")
-    if not len(c):
-        return pd.DataFrame(
-            columns=["conv_id", "turn_idx", "start", "end", "sent_idx",
-                     "norm_surface", "ner_type", "entity_id", "link_score"]
-        )
-    # pandas-aware null check: after the left-merge a missing entity
-    # embedding arrives as float NaN, not None — `e is None` alone would
-    # crash cosine64 and diverge from the batch path, which scores a
-    # missing embedding as cos=0.0 (operators/linking._score_batches)
-    c["link_score"] = [
-        round(
-            spec.LINK_W_GAZ * spec.GAZ_SCORE_EXACT
-            + spec.LINK_W_EMB
-            * (
-                0.0
-                if e is None or (isinstance(e, float) and pd.isna(e))
-                else spec.cosine64(x, e)
-            ),
-            spec.SCORE_NDIGITS,
-        )
-        for x, e in zip(c.ctx_emb, c.embedding)
-    ]
-    c = c.sort_values(
-        ["mid", "link_score", "entity_id"], ascending=[True, False, True],
-        kind="mergesort",
-    ).drop_duplicates("mid", keep="first")
-    return c[["conv_id", "turn_idx", "start", "end", "sent_idx",
-              "norm_surface", "ner_type", "entity_id", "link_score"]]
-
-
 def streaming_links(
     stream: DataFrame,
     gazetteer_pdf: pd.DataFrame,
@@ -121,48 +82,29 @@ def streaming_links(
     spark: SparkSession,
 ) -> DataFrame:
     """dedup → fused NLP+link mapInPandas over the stream (one Arrow trip)."""
-    sc = spark.sparkContext
-    model = build_model()
-    bc = sc.broadcast(
-        {
-            "WT": np.ascontiguousarray(model["W"].T),
-            "T": model["T"],
-            "start": model["start"],
-            "gaz": V.GazMatcher(gazetteer_pdf),
-            "cand": _candidate_pdf(gazetteer_pdf, emb_pdf),
-        }
+    bc_model, bc_gaz = _broadcasts(spark, gazetteer_pdf)
+    emb = emb_pdf[["entity_id"]].assign(emb_bin=pack64(emb_pdf["embedding"]))
+    bc_cand = spark.sparkContext.broadcast(
+        gazetteer_norm_pdf(gazetteer_pdf).merge(emb, on="entity_id", how="left")
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b = bc.value
+        m, gaz, cand = bc_model.value, bc_gaz.value, bc_cand.value
         for pdf in batches:
-            yield _link_pandas(_mentions_pdf(pdf, b), b["cand"])
+            men = mention_frame(pdf, m, gaz).reset_index(names="mid")
+            c = men.merge(cand, on=["norm_surface", "ner_type"]).set_index("mid")
+            if not len(c):
+                continue
+            # B13 top-1 per mention: max link_score, ties → min entity_id
+            s = score_candidates(c).sort_values(
+                ["mid", "link_score", "entity_id"],
+                ascending=[True, False, True],
+                kind="mergesort",
+            )
+            yield s[~s.index.duplicated()]
 
     return deduped(stream).select("conv_id", "turn_idx", "text").mapInPandas(
         fn, LINKS_SCHEMA
-    )
-
-
-def _mentions_pdf(pdf: pd.DataFrame, b: dict) -> pd.DataFrame:
-    """NLP over one Arrow batch → mentions pandas frame (same layout as
-    ner_spark.nlp.stage.detect_mentions output)."""
-    texts = pdf["text"].to_numpy(dtype=object)
-    men, _ = V.nlp_batch(texts, b["gaz"], b["WT"], b["T"], b["start"])
-    rows = men["row"]
-    types = np.array(spec.NER_TYPES, dtype=object)
-    return pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"].to_numpy()[rows],
-            "turn_idx": pdf["turn_idx"].to_numpy()[rows].astype(np.int32),
-            "sent_idx": men["sent_in_turn"].astype(np.int32),
-            "start": men["start"].astype(np.int32),
-            "end": men["end"].astype(np.int32),
-            "surface": men["surface"],
-            "norm_surface": [spec.norm_surface(s) for s in men["surface"]],
-            "ner_type": types[men["type_code"]] if len(rows) else [],
-            "score": men["score"],
-            "ctx_emb": pd.Series(list(men["ctx"]), dtype=object),
-        }
     )
 
 
@@ -203,16 +145,7 @@ def stateful_incremental_mentions(
     source replays / overlapping micro-batches (stronger than watermark
     dedup: no time bound) while the state stays O(#gaps), not
     O(conversation length) — for any starting index or arrival order."""
-    sc = spark.sparkContext
-    model = build_model()
-    bc = sc.broadcast(
-        {
-            "WT": np.ascontiguousarray(model["W"].T),
-            "T": model["T"],
-            "start": model["start"],
-            "gaz": V.GazMatcher(gazetteer_pdf),
-        }
-    )
+    bc_model, bc_gaz = _broadcasts(spark, gazetteer_pdf)
 
     def fn(
         key: Tuple[Any, ...],
@@ -224,7 +157,7 @@ def stateful_incremental_mentions(
             ivs = list(zip(starts, ends))
         else:
             ivs = []
-        b = bc.value
+        m, gaz = bc_model.value, bc_gaz.value
         for pdf in batches:
             # state filters cross-batch replays; drop_duplicates filters
             # copies arriving inside the same micro-batch chunk
@@ -237,7 +170,7 @@ def stateful_incremental_mentions(
             if not len(fresh):
                 continue
             ivs = _merge_intervals(ivs, [int(t) for t in fresh["turn_idx"]])
-            out = _mentions_pdf(fresh, b).drop(columns=["ctx_emb"])
+            out = mention_frame(fresh, m, gaz).drop(columns=["ctx_emb"])
             if len(out):
                 yield out
         state.update(([s for s, _ in ivs], [e for _, e in ivs]))

@@ -1,8 +1,7 @@
 #!/usr/bin/env python
-"""A/B the distributed-perceptron training modes (batch vs Collins
-averaging vs iterative parameter mixing) on the tiny CoNLL corpus:
-per-pass mistake curve, passes-to-fit, held-out span F1 at several
-pass budgets. Appends the table to BENCH/BASELINE.md — the evidence
+"""A/B the distributed-perceptron training modes (batch vs iterative
+parameter mixing) on the tiny CoNLL corpus: per-pass mistake curve,
+passes-to-fit, held-out span F1 at several pass budgets. Appends the table to BENCH/BASELINE.md — the evidence
 behind the production default (round-4 VERDICT item 3).
 
     python tools/train_ab.py [--iters 12] [--budgets 2,4,8,12]
@@ -46,7 +45,7 @@ def main() -> None:
 
     rows = []
     curves = {}
-    for mode in ("batch", "averaged", "ipm"):
+    for mode in ("batch", "ipm"):
         for budget in budgets:
             t0 = time.time()
             WT, hist = train_perceptron(
